@@ -87,28 +87,14 @@ final case class CrawlConfig(
     // the stash stays empty at any seen-set size).
     foldMinKeys: Long = 4096,
     foldFrac: Double = 0.2,
-    // seen-probe strategy: when the filter blobs (estimated from the seen
-    // count, upper bound) fit under this budget they are collected once per
+    // seen-probe strategy: when the filter blobs (exact serialized bytes,
+    // a manifest counter) fit under this budget they are collected once per
     // fold epoch and BROADCAST, and the probe becomes a codegen'd per-row
     // lookup fused into the candidate chain — no bucket exchange, no typed
     // cogroup sort per consumer. Above it (10^10-url frontiers: ~4 B/key of
     // blobs) the probe stays the co-partitioned cogroup where each task
     // holds only its bucket's blob. 0 forces the cogroup path everywhere.
     broadcastFilterLimitBytes: Long = 256L << 20,
-    // seen-table round cache: when the committed seen dirs are UNCHANGED
-    // from the previous round (zero-new steady state — a frontier draining
-    // to exhaustion) and the estimated table size fits this budget, the
-    // exact-backstop anti-join reads a persisted dataset instead of
-    // re-reading the parquet dirs every round. A 10^10-key seen set
-    // (~16 B/key) never qualifies. 0 disables.
-    seenCacheLimitBytes: Long = 4L << 30,
-    // when the PREVIOUS round discovered nothing new, materialize the probe
-    // chain with a count and write the seen delta only if keys actually
-    // appeared — the write-first shape pays a full dynamic-partition parquet
-    // commit per round just to learn the count is zero. Discovery-phase
-    // rounds (nonzero last round) keep write-first: count and delta write in
-    // one job barrier.
-    idleCountFirst: Boolean = true,
     // logical duration of one fetch-schedule round: a host with robots
     // Crawl-delay D is re-drained no sooner than ceil(D / roundTimeMs)
     // rounds after its last drain (C5 host_next_ok state; within a round,
@@ -187,15 +173,19 @@ private[frontier] final class PartitionTallies
   */
 object CrawlEngine {
 
-  private val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
-  private def timed[A](label: String)(f: => A): A =
-    if (!debugTiming) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[timing] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    }
+  // seen-table round cache: when the committed seen dirs are UNCHANGED from
+  // the previous round (zero-new steady state — a frontier draining to
+  // exhaustion) and the estimated table size fits this budget, the
+  // exact-backstop anti-join reads a persisted dataset instead of
+  // re-reading the parquet dirs every round. A 10^10-key seen set
+  // (~16 B/key) never qualifies.
+  private val SeenCacheLimitBytes = 4L << 30
+
+  // every manifest counter the round loop reads; the bootstrap and every
+  // round commit write all of them
+  private val RequiredCounters = Seq("round", "fetched", "extracted", "seen",
+    "frontier_size", "frontier_rm_size", "filters_folded_dirs", "pending_keys",
+    "delay_rows", "filter_blob_bytes", "max_delay_ms")
 
   /** Wrap `ds` so that each FULLY consumed partition registers
     * (rowCount, Σ weight(row)) into `acc` exactly once (keyed by partition
@@ -492,12 +482,12 @@ object CrawlEngine {
           // (d) the frontier_rm delta rows — information that used to cost
           // a separate bounds/count job per round. Only narrow sort keys
           // travel: k x (hash, url).
-          val keyRows = timed("drain-keys")(eligible
+          val keyRows = eligible
             .select($"url_hash", $"priority", $"depth", $"url")
             .orderBy(desc("priority"), asc("depth"), asc("url"))
             .limit(cfg.roundSize)
             .select($"url_hash", $"url")
-            .as[(Long, String)].collect())
+            .as[(Long, String)].collect()
           knownDrained = Some(keyRows.length.toLong)
           if (keyRows.nonEmpty) {
             var lo = keyRows(0)._2; var hi = lo
@@ -557,9 +547,9 @@ object CrawlEngine {
       else drainBounds match {
         case Some((lo, hi)) => pages.filter($"url" >= lo && $"url" <= hi)
         case None =>
-          val (lo, hi, n) = timed("drain-bounds")(drained
+          val (lo, hi, n) = drained
             .agg(min($"url"), max($"url"), count(lit(1)))
-            .as[(String, String, Long)].head())
+            .as[(String, String, Long)].head()
           knownDrained = Some(n)
           if (n == 0L) pages.limit(0)
           else pages.filter($"url" >= lo && $"url" <= hi)
@@ -756,9 +746,7 @@ object CrawlEngine {
     // time). Splitting dedup and robots into separate jobs (the previous
     // shape) bought nothing but an extra ~1s/round barrier: nothing in the
     // robots chain references dedup twice.
-    timed("detect-robots")(robotsAll.count())
-    if (debugTiming && sys.env.contains("GRAFT_DEBUG_PLAN") && roundNo <= 1)
-      System.err.println(newEntries.queryExecution.executedPlan.toString)
+    robotsAll.count()
     // Job 2: the remaining counters — new urls, (politeness-limited path
     // only) drained, and (detail mode) raw/deduped/allowed candidates — in
     // ONE action; every branch reads job 1's caches (the probe cogroup
@@ -789,7 +777,7 @@ object CrawlEngine {
     // one fewer job barrier per round (scheduling + a full probe-chain
     // re-read, measured ~1s/round at 16 cores on 250k-page rounds).
     val deferNew = counterBranches.isEmpty
-    val counters: Map[Int, (Long, Long, Long)] = timed("counters") {
+    val counters: Map[Int, (Long, Long, Long)] =
       if (deferNew) Map.empty
       else {
         val extra = Seq(newEntries.toDF().select(lit(1).as("src"),
@@ -800,7 +788,6 @@ object CrawlEngine {
           .as[(Int, Long, Long, Long)].collect()
           .map(r => r._1 -> (r._2, r._3, r._4)).toMap
       }
-    }
     def counter(src: Int): (Long, Long, Long) =
       counters.getOrElse(src, (0L, 0L, 0L))
     // job 1 has completed (robotsAll.count above), so every partition of the
@@ -866,8 +853,8 @@ object CrawlEngine {
   /** @return (folded filters table, total serialized blob bytes) — the byte
     *   figure rides the materialization agg and feeds the manifest's
     *   `filter_blob_bytes` counter, so the broadcast-probe gate compares the
-    *   ACTUAL broadcast payload against its budget instead of a uniform
-    *   capacity model (which undercounts skewed or stash-carrying filters).
+    *   ACTUAL broadcast payload against its budget (a capacity model would
+    *   undercount skewed or stash-carrying filters).
     */
   def foldFilters(
       spark: SparkSession,
@@ -1011,20 +998,22 @@ object CrawlEngine {
     val existing = SnapshotStore.latestManifest(stateDir)
     // format guard (round-2 ADVICE): a pre-delta-format snapshot (a full
     // `frontier` table / no frontier_size counter) would otherwise resume as
-    // an empty frontier and "succeed" with zero rounds. Runs BEFORE anything
-    // is persisted: the guard's throw would otherwise leak the cached
-    // robotsSrc plan into the session, and the next run's persist of the
-    // same source then hits CacheManager's "already cached" WARN.
+    // an empty frontier and "succeed" with zero rounds, and one without the
+    // r4 counters (max_delay_ms marks the bucket-partitioned seen layout;
+    // filter_blob_bytes the exact broadcast gate) has no value to resume
+    // from. Runs BEFORE anything is persisted: the guard's throw would
+    // otherwise leak the cached robotsSrc plan into the session, and the
+    // next run's persist of the same source then hits CacheManager's
+    // "already cached" WARN.
     existing.foreach { m =>
-      if (m.dataDirs.contains("frontier") || !m.counters.contains("frontier_size") ||
-          !m.dataDirs.contains("robots") || !m.counters.contains("max_delay_ms"))
+      val missing = RequiredCounters.filterNot(m.counters.contains)
+      if (m.dataDirs.contains("frontier") || !m.dataDirs.contains("robots") ||
+          missing.nonEmpty)
         throw new IllegalStateException(
           s"incompatible legacy snapshot format in $stateDir (expected the " +
-            "delta format: frontier_adds/frontier_rm/robots tables, " +
-            "frontier_size counter, and the r4 bucket-partitioned seen " +
-            "layout marked by the max_delay_ms counter — mixing flat and " +
-            "partitioned seen dirs in one read would conflict); " +
-            "re-bootstrap into a fresh state dir")
+            "delta format: frontier_adds/frontier_rm/robots tables and the " +
+            s"counters ${RequiredCounters.mkString(", ")}; missing " +
+            s"${missing.mkString(", ")}); re-bootstrap into a fresh state dir")
     }
 
     // robots source: only `*/robots.txt` rows can match the fetch join — the
@@ -1099,33 +1088,27 @@ object CrawlEngine {
         m
       }
     var roundNo = manifest.counters("round").toInt + 1
-    var fetchedTotal = manifest.counters.getOrElse("fetched", 0L)
-    var extractedTotal = manifest.counters.getOrElse("extracted", 0L)
-    var seenTotal = manifest.counters.getOrElse("seen", 0L)
-    var frontierSize = manifest.counters.getOrElse("frontier_size", 0L)
-    var rmSize = manifest.counters.getOrElse("frontier_rm_size", 0L)
+    var fetchedTotal = manifest.counters("fetched")
+    var extractedTotal = manifest.counters("extracted")
+    var seenTotal = manifest.counters("seen")
+    var frontierSize = manifest.counters("frontier_size")
+    var rmSize = manifest.counters("frontier_rm_size")
     // fold bookkeeping: how many committed seen-delta dirs the filter blobs
-    // already reflect, and how many keys are pending since the last fold.
-    // (Round-2-format snapshots folded every round: default = all dirs.)
-    var foldedDirs = manifest.counters.getOrElse("filters_folded_dirs",
-      SnapshotStore.dirsOf(manifest, "seen").length.toLong).toInt
-    var pendingKeys = manifest.counters.getOrElse("pending_keys", 0L)
-    var delayRows = manifest.counters.getOrElse("delay_rows", 0L)
+    // already reflect, and how many keys are pending since the last fold
+    var foldedDirs = manifest.counters("filters_folded_dirs").toInt
+    var pendingKeys = manifest.counters("pending_keys")
+    var delayRows = manifest.counters("delay_rows")
     // crawl-delay fast path: a manifest counter (re-checked only when new
     // robots rows land) decides whether any host can EVER be delay-blocked —
     // a corpus whose delays all fit inside one round pays zero per-round
     // cost, and resuming reads the counter instead of running an agg job
-    // (legacy snapshots without the counter fall back to the agg once)
-    var maxDelay = manifest.counters.getOrElse("max_delay_ms",
-      SnapshotStore.read(spark, manifest, "robots", robotsSchema)
-        .agg(coalesce(max($"crawl_delay_ms"), lit(0L))).as[Long].head())
+    var maxDelay = manifest.counters("max_delay_ms")
 
     // seen-probe broadcast (one per FOLD EPOCH — the blobs only change when
     // a fold commits): built lazily from the filters table when the
-    // estimated blob bytes fit cfg.broadcastFilterLimitBytes, destroyed on
-    // fold. The estimate is an upper bound (post-rebuild capacity ≤ the next
-    // power of two above 2x the keys), so a 10^10-url frontier (~4 B/key of
-    // blobs) always stays on the co-partitioned cogroup path.
+    // serialized blob bytes fit cfg.broadcastFilterLimitBytes, destroyed on
+    // fold, so a 10^10-url frontier (~4 B/key of blobs) always stays on the
+    // co-partitioned cogroup path.
     var filtersBc: Option[Broadcast[Array[CuckooFilter]]] = None
     // a dropped broadcast is RETIRED, not destroyed on the spot: the carried
     // frontier's lazy plan (see carriedFrontier below) still references the
@@ -1141,7 +1124,7 @@ object CrawlEngine {
     // discovery-optimistic at start (and on resume) so the first round keeps
     // the one-barrier write-first shape
     var lastRoundHadNew = true
-    // seen-table round cache (see CrawlConfig.seenCacheLimitBytes): keyed by
+    // seen-table round cache (see SeenCacheLimitBytes): keyed by
     // the committed dir list, so any commit that adds a seen delta
     // invalidates it; size-gated off for frontiers whose seen set could not
     // sit in block storage
@@ -1153,9 +1136,7 @@ object CrawlEngine {
     }
     def cachedSeen(dirs: Seq[String],
         fresh: => Dataset[SeenEntry]): Dataset[SeenEntry] = {
-      val fits = cfg.seenCacheLimitBytes > 0 &&
-        seenTotal * 16L <= cfg.seenCacheLimitBytes
-      if (!fits) { dropSeenCache(); fresh }
+      if (seenTotal * 16L > SeenCacheLimitBytes) { dropSeenCache(); fresh }
       else if (seenCacheKey == dirs && seenCacheDs != null) seenCacheDs
       else {
         dropSeenCache()
@@ -1166,18 +1147,8 @@ object CrawlEngine {
     }
     // ACTUAL serialized blob bytes (manifest counter, exact — updated at
     // bootstrap and on every fold; pending keys never touch the blobs, so
-    // between folds the broadcast payload is exactly this). -1 on a legacy
-    // snapshot without the counter → capacity-model upper bound fallback
-    // (which can undercount a skewed/stash-carrying filter set — the exact
-    // counter is the fix for that, per the r4 advice).
-    var filterBytes = manifest.counters.getOrElse("filter_blob_bytes", -1L)
-    def estimatedFilterBytes(): Long =
-      if (filterBytes >= 0L) filterBytes
-      else {
-        val perBucket = math.max(cfg.filterCapacityPerBucket,
-          2L * (seenTotal / math.max(1, cfg.numBuckets) + 1))
-        cfg.numBuckets.toLong * CuckooFilter.blobBytesForCapacity(perBucket)
-      }
+    // between folds the broadcast payload is exactly this)
+    var filterBytes = manifest.counters("filter_blob_bytes")
 
     // In-memory frontier carry: round r+1 consumes round r's frontier
     // (prev − drained ∪ adds) straight from the persisted datasets instead
@@ -1217,8 +1188,7 @@ object CrawlEngine {
     // parquet re-read), and before run() returns.
     var pendingCommit: Option[scala.concurrent.Future[Unit]] = None
     def awaitCommit(): Unit = pendingCommit.foreach { f =>
-      timed("commit-await")(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
       pendingCommit = None
     }
     var continue = true
@@ -1226,53 +1196,48 @@ object CrawlEngine {
       // compact-cut (or first) round: the next read goes to parquet — the
       // in-flight writes it will read must be durable first
       if (carriedFrontier.isEmpty) awaitCommit()
-      val (frontier, seen, filters, robots, pendingSeen, blockedHosts, delayActive, seenDirs) =
-        timed("read-state") {
-          // persisted for the round: the adds-minus-tombstones anti-join
-          // (rm grows every round) otherwise recomputes from parquet in
-          // EVERY consumer — the drain-keys collect, job 1's semi-join back,
-          // and compaction rounds' rewrite. First touch is the single-job
-          // drain-keys collect, so the cache populates race-free.
-          val frontier = carriedFrontier
-            .getOrElse(readFrontier(spark, manifest).persist())
-          val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
-          val seen = cachedSeen(seenDirs, readSeenDirs(spark, seenDirs))
-          val filters = carriedFilters.getOrElse(
-            SnapshotStore.read(spark, manifest, "filters", filterSchema)
-              .as[FilterState])
-          val robots = carriedRobots.getOrElse(
-            SnapshotStore.read(spark, manifest, "robots", robotsSchema)
-              .as[RobotsEntry])
-          val pendingDirs = seenDirs.drop(foldedDirs)
-          val pendingSeen =
-            if (pendingDirs.isEmpty) None
-            else Some(readSeenDirs(spark, pendingDirs).toDF())
-          val delayActive = maxDelay > cfg.roundTimeMs
-          val blockedHosts: Option[DataFrame] =
-            if (delayActive && delayRows > 0)
-              carriedDelay
-                .map(df => df.filter($"next_ok_round" > roundNo).select($"host"))
-                .orElse {
-                  if (manifest.dataDirs.contains("host_next_ok"))
-                    Some(SnapshotStore.read(spark, manifest, "host_next_ok", delaySchema)
-                      .filter($"next_ok_round" > roundNo).select($"host"))
-                  else None
-                }
-            else None
-          (frontier, seen, filters, robots, pendingSeen, blockedHosts, delayActive, seenDirs)
-        }
+      // persisted for the round: the adds-minus-tombstones anti-join
+      // (rm grows every round) otherwise recomputes from parquet in
+      // EVERY consumer — the drain-keys collect, job 1's semi-join back,
+      // and compaction rounds' rewrite. First touch is the single-job
+      // drain-keys collect, so the cache populates race-free.
+      val frontier = carriedFrontier
+        .getOrElse(readFrontier(spark, manifest).persist())
+      val seenDirs = SnapshotStore.dirsOf(manifest, "seen")
+      val seen = cachedSeen(seenDirs, readSeenDirs(spark, seenDirs))
+      val filters = carriedFilters.getOrElse(
+        SnapshotStore.read(spark, manifest, "filters", filterSchema)
+          .as[FilterState])
+      val robots = carriedRobots.getOrElse(
+        SnapshotStore.read(spark, manifest, "robots", robotsSchema)
+          .as[RobotsEntry])
+      val pendingDirs = seenDirs.drop(foldedDirs)
+      val pendingSeen =
+        if (pendingDirs.isEmpty) None
+        else Some(readSeenDirs(spark, pendingDirs).toDF())
+      val delayActive = maxDelay > cfg.roundTimeMs
+      val blockedHosts: Option[DataFrame] =
+        if (delayActive && delayRows > 0)
+          carriedDelay
+            .map(df => df.filter($"next_ok_round" > roundNo).select($"host"))
+            .orElse {
+              if (manifest.dataDirs.contains("host_next_ok"))
+                Some(SnapshotStore.read(spark, manifest, "host_next_ok", delaySchema)
+                  .filter($"next_ok_round" > roundNo).select($"host"))
+              else None
+            }
+        else None
       if (filtersBc.isEmpty && cfg.broadcastFilterLimitBytes > 0 &&
-          estimatedFilterBytes() <= cfg.broadcastFilterLimitBytes)
-        timed("filters-bc") {
-          val rows = filters.collect()
-          val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
-          val arr = new Array[CuckooFilter](n)
-          rows.foreach(fs => arr(fs.bucket) = CuckooFilter.fromBytes(fs.cuckoo_bytes))
-          filtersBc = Some(spark.sparkContext.broadcast(arr))
-        }
-      val r = timed("round-build")(round(spark, roundNo, frontier, frontierSize,
+          filterBytes <= cfg.broadcastFilterLimitBytes) {
+        val rows = filters.collect()
+        val n = rows.iterator.map(_.bucket + 1).foldLeft(cfg.numBuckets)(math.max)
+        val arr = new Array[CuckooFilter](n)
+        rows.foreach(fs => arr(fs.bucket) = CuckooFilter.fromBytes(fs.cuckoo_bytes))
+        filtersBc = Some(spark.sparkContext.broadcast(arr))
+      }
+      val r = round(spark, roundNo, frontier, frontierSize,
         seen, filters, pendingSeen, robots, blockedHosts, delayActive, pages,
-        robotsSrc, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc))
+        robotsSrc, cfg, retainOutputs = collectOutputs, filtersBc = filtersBc)
       val stats = r.stats
       // the previous round's commit ran CONCURRENTLY with this round's jobs
       // (its files are invisible to them — state is carried in memory);
@@ -1312,29 +1277,22 @@ object CrawlEngine {
         // barrier instead of two. The dir is the one commit() would have
         // used; it is recorded via `preWritten`, or deleted again when the
         // round discovered nothing (the old zero-delta skip).
-        // EXCEPT in the zero-new steady state (idleCountFirst + the previous
-        // round found nothing): a frontier draining to exhaustion would pay
+        // EXCEPT in the zero-new steady state (the previous round found
+        // nothing): a frontier draining to exhaustion would pay
         // a full dynamic-partition parquet commit EVERY round just to learn
         // the count is zero — there, materialize the cache with a bare
         // count and write the delta (from the now-cached rows, cheap) only
         // when keys actually appeared. One-round lag: a discovery burst
         // after an idle stretch pays one extra job barrier, then write-first
         // resumes.
-        val countFirst = cfg.idleCountFirst && !lastRoundHadNew
+        val countFirst = !lastRoundHadNew
         var preSeenDir: Option[String] = None
-        r.newTallies.foreach { _ =>
-          if (countFirst) {
-            timed("seen-count")(r.seenDelta.count())
-            if (r.newTallies.exists(_.totals._1 > 0)) {
-              val dir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-              timed("seen-write")(r.seenDelta.toDF().repartition(col("bucket"))
-                .write.mode("overwrite").partitionBy("bucket").parquet(dir))
-              preSeenDir = Some(dir)
-            }
-          } else {
+        r.newTallies.foreach { t =>
+          if (countFirst) r.seenDelta.count()
+          if (!countFirst || t.totals._1 > 0) {
             val dir = SnapshotStore.deltaDirFor(stateDir, roundNo + 1, "seen")
-            timed("seen-write")(r.seenDelta.toDF().repartition(col("bucket"))
-              .write.mode("overwrite").partitionBy("bucket").parquet(dir))
+            r.seenDelta.toDF().repartition(col("bucket"))
+              .write.mode("overwrite").partitionBy("bucket").parquet(dir)
             preSeenDir = Some(dir)
           }
         }
@@ -1362,8 +1320,8 @@ object CrawlEngine {
           else {
             val pendingAll = pendingSeen
               .map(df => df.as[SeenEntry].union(r.seenDelta)).getOrElse(r.seenDelta)
-            val (f, fb) = timed("fold")(foldFilters(spark, filters, pendingAll,
-              seen.union(r.seenDelta), cfg.filterCapacityPerBucket))
+            val (f, fb) = foldFilters(spark, filters, pendingAll,
+              seen.union(r.seenDelta), cfg.filterCapacityPerBucket)
             foldedBytes = fb
             Some(f)
           }
@@ -1461,7 +1419,7 @@ object CrawlEngine {
         // Awaited right after the next round's jobs complete. Detail mode
         // (newTallies empty — the seen delta rides INSIDE this commit, and
         // the next round reads the seen dirs) stays synchronous.
-        val (m2, commitDone) = timed("commit")(SnapshotStore.commitAsync(
+        val (m2, commitDone) = SnapshotStore.commitAsync(
           stateDir, roundNo + 1, tables,
           Map("round" -> roundNo.toLong, "fetched" -> fetchedTotal,
             "extracted" -> extractedTotal, "seen" -> seenTotal,
@@ -1474,7 +1432,7 @@ object CrawlEngine {
           deltas = frontierDeltas ++ robotsDeltas ++ seenDeltas ++ lineageDeltas,
           carry = carry ++ carryDeltas,
           partitionCols = Map("seen" -> Seq("bucket")),
-          preWritten = seenPre))
+          preWritten = seenPre)
         manifest = m2
         pendingCommit = Some(commitDone)
         if (r.newTallies.isEmpty) awaitCommit()
@@ -1518,15 +1476,13 @@ object CrawlEngine {
           carriedFilters = Some(folded.map(_.localCheckpoint(false)).getOrElse(filters))
           delayTable.foreach(t => carriedDelay = Some(t._1.localCheckpoint(false)))
         }
-        timed("unpersist") {
-          // superseded carried state only — the new carried filters/delay
-          // datasets must stay cached across rounds until replaced
-          if (doFold || compact) prevCarriedFilters.foreach(_.unpersist())
-          if (delayTable.isDefined || compact) prevCarriedDelay.foreach(_.unpersist())
-          if (compact) {
-            folded.foreach(_.unpersist())
-            delayTable.foreach(_._1.unpersist())
-          }
+        // superseded carried state only — the new carried filters/delay
+        // datasets must stay cached across rounds until replaced
+        if (doFold || compact) prevCarriedFilters.foreach(_.unpersist())
+        if (delayTable.isDefined || compact) prevCarriedDelay.foreach(_.unpersist())
+        if (compact) {
+          folded.foreach(_.unpersist())
+          delayTable.foreach(_._1.unpersist())
         }
         // deferred: the carried plans read these caches until their own
         // caches materialize (next round's first jobs)

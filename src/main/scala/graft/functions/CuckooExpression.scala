@@ -11,8 +11,8 @@ import graft.frontier.CuckooFilter
 /** `cuckoo_seen(bucket, url_hash)` over a BROADCAST array of per-bucket
   * cuckoo filters — the small-state fast path of the seen-set probe (C3).
   *
-  * When the filter blobs fit in executor memory (run()'s estimate gate,
-  * `CrawlConfig.broadcastFilterLimitBytes`), probing per row via a codegen'd
+  * When the filter blobs fit in executor memory (run()'s exact blob-byte
+  * gate, `CrawlConfig.broadcastFilterLimitBytes`), probing per row via a codegen'd
   * lookup keeps the whole candidate chain inside one WholeStageCodegen span:
   * no bucket exchange, no typed cogroup, no object serde — the alternative
   * cogroup path pays a full sort of the candidate volume PER CONSUMER (the

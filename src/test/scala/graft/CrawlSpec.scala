@@ -56,10 +56,12 @@ class CrawlSpec extends AnyFunSuite {
   /** Reference simulator: same policy, plain collections. Returns the seen
     * set plus the per-NONEMPTY-round drains as (roundNo, urls) — idle rounds
     * (all hosts inside a crawl-delay window) tick the clock silently, exactly
-    * like the engine.
+    * like the engine. A non-empty `allowedHosts` filters extracted links
+    * only, never seeds (web_spider.py's LxmlLinkExtractor(allow_domains=…)).
     */
   def simulate(rulesSeq: Seq[RobotsRule] = robots,
-      roundTimeMs: Long = 1000L): (Set[String], Vector[(Int, Vector[String])]) = {
+      roundTimeMs: Long = 1000L,
+      allowedHosts: Set[String] = Set.empty): (Set[String], Vector[(Int, Vector[String])]) = {
     val rules = rulesSeq.map(r => r.host -> r).toMap
     val frontier = mutable.SortedSet.empty[(Int, String)] // (depth, url)
     val seen = mutable.Set.empty[String]
@@ -97,7 +99,8 @@ class CrawlSpec extends AnyFunSuite {
             val doc = HtmlParser.parseBytes(html)
             Detector.extractLinks(u, doc).foreach { l =>
               val c = UrlOps.canonicalize(l)
-              if (ruleAllows(rules, c)) {
+              if (ruleAllows(rules, c) &&
+                  (allowedHosts.isEmpty || allowedHosts.contains(UrlOps.hostOf(c)))) {
                 val e = (depth + 1, c)
                 cands.get(c) match {
                   case Some(old) if old._1 < e._1 ||
@@ -128,9 +131,7 @@ class CrawlSpec extends AnyFunSuite {
       " under every filter-fold config") {
     import spark.implicits._
     val pages = pagesCached
-    val (simSeen, simDrains) = simulate()
-    val simSeenHashes = simSeen.map(UrlOps.fnv1a64)
-    val simFetchedPerRound = simDrains.map(_._2.filter(pageMap.contains))
+    val unrestrictedSeen = simulate()._1
 
     // lazy-fold (default: pending path, filters never refold at this scale),
     // fold-every-round (round-2 behavior), and fold+grow (tiny capacity
@@ -148,8 +149,16 @@ class CrawlSpec extends AnyFunSuite {
       // this scale, so every round's cuckoo misses run the pending-seen
       // anti-join with NON-EMPTY deltas — the combination the eager cogroup
       // config (empty pending by construction) cannot reach
-      "cogroup-lazy" -> cfg.copy(broadcastFilterLimitBytes = 0L))
+      "cogroup-lazy" -> cfg.copy(broadcastFilterLimitBytes = 0L),
+      // P13 allow-domains: extracted links off the allow-list are dropped,
+      // seeds are not
+      "allowed-lazy" -> cfg.copy(allowedHosts = Set("host0.example", "host1.example")))
     for ((label, fcfg) <- configs) {
+      val (simSeen, simDrains) = simulate(allowedHosts = fcfg.allowedHosts)
+      if (fcfg.allowedHosts.nonEmpty)
+        assert(simSeen != unrestrictedSeen, s"[$label] the allow-list must change the crawl")
+      val simSeenHashes = simSeen.map(UrlOps.fnv1a64)
+      val simFetchedPerRound = simDrains.map(_._2.filter(pageMap.contains))
       val stateDir = java.nio.file.Files.createTempDirectory(s"graft-crawlspec-$label-").toString
       val stats = CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts),
         robots, fcfg, stateDir)
@@ -296,6 +305,23 @@ class CrawlSpec extends AnyFunSuite {
       CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, stateDir)
     }
     assert(e.getMessage.contains("incompatible legacy snapshot format"))
+
+    // a delta-format state with every table but without the
+    // filter_blob_bytes counter (the round loop's broadcast-probe gate):
+    // rejected too, not resumed on an estimate
+    val deltaDir = java.nio.file.Files.createTempDirectory("graft-legacy-delta-").toString
+    CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots,
+      cfg.copy(maxRounds = 0), deltaDir)
+    val m0 = SnapshotStore.latestManifest(deltaDir).get
+    assert(Seq("frontier_adds", "frontier_rm", "seen", "robots", "filters", "lineage")
+      .forall(m0.dataDirs.contains))
+    SnapshotStore.writeManifest(deltaDir, m0.copy(version = m0.version + 1,
+      counters = m0.counters - "filter_blob_bytes"))
+    val e2 = intercept[IllegalStateException] {
+      CrawlEngine.runWithRules(spark, pages, SyntheticWeb.seedUrls(nHosts), robots, cfg, deltaDir)
+    }
+    assert(e2.getMessage.contains("incompatible legacy snapshot format"))
+    assert(e2.getMessage.contains("missing filter_blob_bytes"))
   }
 
   test("crawl is resumable from the latest snapshot with identical final state") {
@@ -339,20 +365,26 @@ class CrawlSpec extends AnyFunSuite {
         .map(UrlOps.canonicalize)
     }).distinct.filter(!_.endsWith("/robots.txt"))
     val drainCfg = cfg.copy(roundSize = 8, hostBudgetPerRound = 100, maxRounds = 16)
-    val stateDir = java.nio.file.Files.createTempDirectory("graft-drain-").toString
-    val stats = CrawlEngine.runWithRules(spark, pages, allUrls, robots, drainCfg, stateDir)
-    assert(stats.fetched > 0)
-    val m = SnapshotStore.latestManifest(stateDir).get
-    val seenDirs = SnapshotStore.dirsOf(m, "seen")
-    assert(seenDirs.length == 1,
-      s"pure drain must not accumulate seen delta dirs, got ${seenDirs.length}")
-    // and the seen set is exactly the robots-allowed seeds
-    val seen = CrawlEngine.readSeenDirs(spark, seenDirs)
-      .select("url_hash").as[Long].collect().toSet
     val rules = robots.map(r => r.host -> r).toMap
     val expected = allUrls.map(UrlOps.canonicalize).distinct
       .filter(ruleAllows(rules, _)).map(UrlOps.fnv1a64).toSet
-    assert(seen == expected)
+    // detail mode runs round()'s counters job (write-first seen delta);
+    // without it the new-url count is deferred to the commit, which takes
+    // the count-first path after the first zero-new round
+    for ((label, dcfg) <- Seq("detail" -> drainCfg,
+        "count-first" -> drainCfg.copy(lineageDetail = false))) {
+      val stateDir = java.nio.file.Files.createTempDirectory(s"graft-drain-$label-").toString
+      val stats = CrawlEngine.runWithRules(spark, pages, allUrls, robots, dcfg, stateDir)
+      assert(stats.fetched > 0, s"[$label]")
+      val m = SnapshotStore.latestManifest(stateDir).get
+      val seenDirs = SnapshotStore.dirsOf(m, "seen")
+      assert(seenDirs.length == 1,
+        s"[$label] pure drain must not accumulate seen delta dirs, got ${seenDirs.length}")
+      // and the seen set is exactly the robots-allowed seeds
+      val seen = CrawlEngine.readSeenDirs(spark, seenDirs)
+        .select("url_hash").as[Long].collect().toSet
+      assert(seen == expected, s"[$label]")
+    }
   }
 
   test("P14: test-mode skips seed urls containing 'example'") {
